@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import extract_transcripts
-from .sources.io import read_table, table_exists, write_table
+from .sources.io import local_frame, read_table, table_exists, write_table
 
 DEFAULT_BUCKETS = 64
 
@@ -212,14 +212,12 @@ def run(
         }
         fresh = [r for r in rows if r.bucket not in seen]
     if fresh:
-        write_table(
-            spark.createDataFrame(fresh, lineage.schema), p["lineage"], mode="append"
-        )
+        write_table(local_frame(spark, fresh, lineage.schema), p["lineage"], mode="append")
 
     if rows:
         # manifest marks EVERY bucket processed this run as done — the
         # commit point of the resume protocol (written last)
-        lineage_local = spark.createDataFrame(rows, lineage.schema)
+        lineage_local = local_frame(spark, rows, lineage.schema)
         manifest = (
             lineage_local.select("bucket", "ts")
             .withColumn("run_id", F.lit(run_id))

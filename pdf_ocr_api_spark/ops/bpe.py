@@ -399,17 +399,19 @@ def save_bpe(spark, model: BpeModel, path: str) -> None:
     """Persist vocab + merges + props as parquet tables under ``path``.
     Props carry the stats and a format version so a loader can refuse
     models it does not understand (the ivfpq props pattern)."""
-    vocab_df = spark.createDataFrame(
-        [(i, bytearray(tok)) for i, tok in enumerate(model.vocab)], "id INT, token BINARY"
+    from ..sources.io import local_frame
+
+    vocab_df = local_frame(
+        spark, [(i, bytearray(tok)) for i, tok in enumerate(model.vocab)], "id INT, token BINARY"
     )
-    merges_df = spark.createDataFrame(
-        [(r, a, b) for r, (a, b) in enumerate(model.merges)], "rank INT, left INT, right INT"
+    merges_df = local_frame(
+        spark, [(r, a, b) for r, (a, b) in enumerate(model.merges)], "rank INT, left INT, right INT"
     )
     props = {"format": "bpe-v1", "vocab_size": str(len(model.vocab))}
     for k, v in model.stats.items():
         if v is not None and not isinstance(v, (dict, list)):
             props[f"stat.{k}"] = str(v)
-    props_df = spark.createDataFrame(list(props.items()), "key STRING, value STRING")
+    props_df = local_frame(spark, list(props.items()), "key STRING, value STRING")
     vocab_df.coalesce(1).write.mode("overwrite").parquet(f"{path}/vocab")
     merges_df.coalesce(1).write.mode("overwrite").parquet(f"{path}/merges")
     props_df.coalesce(1).write.mode("overwrite").parquet(f"{path}/props")

@@ -418,11 +418,12 @@ def log_run(
     second row under the same ``batch-N`` run id (the data tables
     reconcile, see ``sync_signatures``); operators should de-duplicate
     on run id when aggregating."""
-    from ..sources.io import write_table
+    from ..sources.io import local_frame, write_table
 
     m = metrics or {}
     write_table(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(mode, run_id, int(rows_kept), int(m.get("dropped_buckets") or 0), m.get("max_bucket"))],
             "mode STRING, run_id STRING, rows_kept LONG, dropped_buckets LONG, max_bucket LONG",
         ),
@@ -458,11 +459,12 @@ def sync_signatures(
     band hashes collapse — that must be a loud ValueError, not a recall
     loss (r5 advice). Pre-props indexes (r4 stores) get their props
     backfilled from the observed signature length."""
-    from ..sources.io import read_table, table_exists, write_table
+    from ..sources.io import local_frame, read_table, table_exists, write_table
 
     def _write_props() -> None:
         write_table(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [("num_hashes", str(num_hashes)), ("k", str(k))],
                 "key STRING, value STRING",
             ),

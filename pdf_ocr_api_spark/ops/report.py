@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.io import local_frame
 from .textstats import ws_tokens
 
 __all__ = ["corpus_report"]
@@ -203,7 +204,7 @@ def corpus_report(
                         )
                     )
                 rows.append(("lang_quality", r["_lang"], "∅", _f(r["q_null"])))
-    parts = [spark.createDataFrame(rows, _OUT_SCHEMA)]
+    parts = [local_frame(spark, rows, _OUT_SCHEMA)]
 
     if domain_col and total_docs > 0:
         from pyspark.sql import Window

@@ -22,6 +22,8 @@ import random
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.io import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
@@ -223,7 +225,8 @@ def ivf_index(
 
 
 def _write_centroids(spark, centroids: list[list[float]], target: str) -> None:
-    spark_centroids = spark.createDataFrame(
+    spark_centroids = local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "list_id INT, centroid ARRAY<DOUBLE>",
     )
@@ -245,7 +248,7 @@ def _write_codebooks(spark, codebooks: list, target: str) -> None:
         for i, cb in enumerate(codebooks)
         for j, centroid in enumerate(cb)
     ]
-    meta = spark.createDataFrame(rows, "subspace INT, code INT, centroid ARRAY<DOUBLE>")
+    meta = local_frame(spark, rows, "subspace INT, code INT, centroid ARRAY<DOUBLE>")
     from ..sources.io import write_table
 
     write_table(meta, target, mode="create")
@@ -693,7 +696,8 @@ def save_ivfpq_index(
     write_table(codes, f"{target}_codes", mode="create", partition_by=["ivf_list"])
     _write_centroids(spark, centroids, f"{target}_centroids")
     _write_codebooks(spark, codebooks, f"{target}_codebooks")
-    props = spark.createDataFrame(
+    props = local_frame(
+        spark,
         [("residual", str(bool(residual))), ("normalize", str(bool(normalize)))],
         "key STRING, value STRING",
     )
@@ -713,7 +717,7 @@ def save_ivfpq_index(
         )
         mean_dist = float(np.sqrt(np.maximum(dd.min(axis=1), 0.0)).mean())
         write_table(
-            spark.createDataFrame([("build", int(len(x)), mean_dist)], _DRIFT_SCHEMA),
+            local_frame(spark, [("build", int(len(x)), mean_dist)], _DRIFT_SCHEMA),
             f"{target}_drift",
             mode="create",
         )
@@ -764,14 +768,14 @@ def ivfpq_append(
     row = (batch, int(stats.n), batch_mean if batch_mean is not None else 0.0)
     drift_target = f"{target}_drift"
     if table_exists(spark, drift_target):
-        write_table(spark.createDataFrame([row], _DRIFT_SCHEMA), drift_target, mode="append")
+        write_table(local_frame(spark, [row], _DRIFT_SCHEMA), drift_target, mode="append")
         base = [
             r.mean_dist
             for r in read_table(spark, drift_target).filter(F.col("batch") == "build").collect()
         ]
         build_mean = base[0] if base else None
     else:
-        write_table(spark.createDataFrame([row], _DRIFT_SCHEMA), drift_target, mode="create")
+        write_table(local_frame(spark, [row], _DRIFT_SCHEMA), drift_target, mode="create")
         build_mean = None
     return {
         "appended": int(stats.n),

@@ -59,7 +59,13 @@ def build_session(
         b = b.config("spark.locality.wait", "0s")
     if shuffle_partitions:
         b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    return b.getOrCreate()
+    spark = b.getOrCreate()
+    # the package import ran before any session existed: re-check now
+    # so an explicit dataFrameDebugging=true in the launch conf wins
+    from ._pydriver import disable_dataframe_debug_origin
+
+    disable_dataframe_debug_origin()
+    return spark
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -124,6 +124,54 @@ def write_table(
         raise ValueError(mode)
 
 
+def _epoch_us(v) -> int:
+    """Exact microseconds since the epoch for a ``datetime``. A naive
+    one is wall time in the process's local zone — what ``collect()``
+    returns for a TIMESTAMP — and ``astimezone`` resolves it with its
+    ``fold``, so even a repeated DST hour converts back exactly."""
+    from datetime import datetime, timedelta, timezone
+
+    if v.tzinfo is None:
+        v = v.astimezone()
+    return (v - datetime(1970, 1, 1, tzinfo=timezone.utc)) // timedelta(microseconds=1)
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A small table built from driver-side rows (sequences in
+    ``schema`` order; ``schema`` a ``StructType`` or DDL string).
+
+    The frame plans as a ``LocalRelation``: the rows travel to the JVM
+    as one Arrow table, so reading, writing or broadcasting it launches
+    no Python task, where ``spark.createDataFrame(list_of_rows)`` plans
+    an RDD that every consuming job maps through Python workers, each
+    costing a fixed ~0.3–0.5 s (see ``ops/stage.py``).
+
+    Top-level TIMESTAMP values are converted to exact instants here:
+    the Arrow path would otherwise read a naive ``datetime`` in the
+    session time zone, not the process one ``collect()`` produced it
+    in. Nested timestamps are not supported. The rows are embedded in
+    the plan, so keep this for tables whose size does not grow with the
+    data (one row per bucket, run, property or index parameter); tables
+    with a row per input record or per query stay on
+    ``spark.createDataFrame``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import TimestampType, _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for field, vals in zip(schema.fields, cols):
+        if isinstance(field.dataType, TimestampType):
+            us = [None if v is None else _epoch_us(v) for v in vals]
+            arrays.append(pa.array(us, pa.int64()).cast(pa.timestamp("us", tz="UTC")))
+        else:
+            arrays.append(pa.array(vals, to_arrow_type(field.dataType)))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, names=schema.names), schema)
+
+
 def table_exists(spark: SparkSession, target: str) -> bool:
     if is_table_ident(target):
         return spark.catalog.tableExists(target)

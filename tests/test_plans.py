@@ -301,3 +301,44 @@ def test_one_wave_partitioning_rule(spark):
     under = spark.range(1000).coalesce(1)
     out2 = ST.one_wave(under.selectExpr("id"))
     assert out2.rdd.getNumPartitions() == dp
+
+
+def test_one_wave_reads_partition_count_from_the_plan(spark, stored):
+    """The count comes from the frame's executed plan (adaptive or not):
+    a misread would leave these small frames off one wave."""
+    from pdf_ocr_api_spark.ops import stage as ST
+
+    dp = spark.sparkContext.defaultParallelism
+    for df in (stored, stored.filter(F.col("turn_idx") > 0), spark.range(100).repartition(dp + 3)):
+        assert ST.one_wave(df).rdd.getNumPartitions() == dp, df.rdd.getNumPartitions()
+
+
+def test_one_wave_leaves_streaming_frames_untouched(spark):
+    from pdf_ocr_api_spark.ops import stage as ST
+
+    stream = spark.readStream.format("rate").load()
+    assert ST.one_wave(stream) is stream
+
+
+def test_driver_row_tables_plan_as_local_relations(spark):
+    """Tables built from driver rows are LocalRelations: consuming them
+    launches no Python task (an RDD-backed frame would be a LogicalRDD
+    mapped through Python workers)."""
+    import datetime as dt
+
+    from pdf_ocr_api_spark import conversation
+    from pdf_ocr_api_spark.sources.io import local_frame
+
+    frames = [
+        local_frame(
+            spark,
+            [(1, "a", dt.datetime(2024, 1, 2, 3, 4, 5), [1.0, 2.0]), (2, None, None, None)],
+            "id INT, s STRING, ts TIMESTAMP, v ARRAY<DOUBLE>",
+        ),
+        local_frame(spark, [], "key STRING, value STRING"),
+        conversation.tipo_dim_df(spark, fixtures.DEPARA_RAW["tipoCertidao"]),
+    ]
+    for df in frames:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    assert frames[0].count() == 2 and frames[1].count() == 0

@@ -2,6 +2,8 @@
 opt-out honored, and provably result-neutral (the wrapper only decorates
 error metadata, never values)."""
 
+import os
+
 import pyspark.errors.utils as eu
 import pytest
 
@@ -16,12 +18,15 @@ def restore_gate():
 
 
 def test_package_import_disabled_the_gate():
+    if os.environ.get("PDF_OCR_SPARK_DF_DEBUGGING", "") == "1":
+        pytest.skip("opted out: the package left the gate at PySpark's default")
     # conftest imported the package long before this test ran
     assert eu._enable_debugging_cache is False
     assert eu.is_debugging_enabled() is False
 
 
-def test_idempotent_and_reports_true(restore_gate):
+def test_idempotent_and_reports_true(restore_gate, monkeypatch):
+    monkeypatch.delenv("PDF_OCR_SPARK_DF_DEBUGGING", raising=False)
     assert disable_dataframe_debug_origin() is True
     assert disable_dataframe_debug_origin() is True
     assert eu._enable_debugging_cache is False
@@ -29,6 +34,44 @@ def test_idempotent_and_reports_true(restore_gate):
 
 def test_env_opt_out_leaves_gate_untouched(restore_gate, monkeypatch):
     monkeypatch.setenv("PDF_OCR_SPARK_DF_DEBUGGING", "1")
+    eu._enable_debugging_cache = True
+    assert disable_dataframe_debug_origin() is False
+    assert eu._enable_debugging_cache is True
+
+
+def test_explicit_user_true_is_honoured(restore_gate, monkeypatch):
+    """A session whose conf explicitly enables debugging keeps the gate
+    on (static confs cannot be set on the shared test session, so the
+    active session is stood in for)."""
+    from pyspark.sql import SparkSession
+
+    class _Conf:
+        def get(self, key, default=None):
+            return "true" if key == "spark.python.sql.dataFrameDebugging.enabled" else default
+
+    class _Session:
+        conf = _Conf()
+
+    monkeypatch.delenv("PDF_OCR_SPARK_DF_DEBUGGING", raising=False)
+    monkeypatch.setattr(SparkSession, "getActiveSession", classmethod(lambda cls: _Session()))
+    eu._enable_debugging_cache = False
+    assert disable_dataframe_debug_origin() is False
+    assert eu._enable_debugging_cache is True
+
+
+def test_unset_conf_on_live_session_disables(restore_gate, spark, monkeypatch):
+    monkeypatch.delenv("PDF_OCR_SPARK_DF_DEBUGGING", raising=False)
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled", None) is None
+    eu._enable_debugging_cache = True
+    assert disable_dataframe_debug_origin() is True
+    assert eu._enable_debugging_cache is False
+
+
+def test_unverified_pyspark_version_is_a_no_op(restore_gate, monkeypatch):
+    import pyspark
+
+    monkeypatch.delenv("PDF_OCR_SPARK_DF_DEBUGGING", raising=False)
+    monkeypatch.setattr(pyspark, "__version__", "9.0.0")
     eu._enable_debugging_cache = True
     assert disable_dataframe_debug_origin() is False
     assert eu._enable_debugging_cache is True

@@ -112,3 +112,64 @@ def test_lineage_input_count_measured_on_input(spark, transcripts, tmp_path):
     }
     got = {r.bucket: r.input_count for r in lin.collect()}
     assert got == want
+
+
+def test_lineage_ts_exact_across_time_zones(spark, transcripts, tmp_path, monkeypatch):
+    """Lineage and manifest carry the collected rollup's ``ts`` exactly,
+    even when the session time zone differs from the process one (the
+    collected ``ts`` is a naive process-local datetime)."""
+    import time
+
+    from pdf_ocr_api_spark import sources
+
+    captured = []
+    real = sources.io.local_frame
+
+    def spy(spark_, rows, schema):
+        captured.append(list(rows))
+        return real(spark_, rows, schema)
+
+    monkeypatch.setattr(lineage, "local_frame", spy)
+    monkeypatch.setenv("TZ", "America/Sao_Paulo")
+    time.tzset()
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    out = str(tmp_path / "tz")
+    try:
+        t0 = time.time()
+        lineage.run(spark, transcripts, out, run_id="tz", n_buckets=4)
+        t1 = time.time()
+        # naive process-local datetimes: convert while TZ still applies
+        expected = {
+            r.bucket: int(r.ts.timestamp()) * 10**6 + r.ts.microsecond for r in captured[0]
+        }
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+        monkeypatch.undo()
+        time.tzset()
+
+    def micros(path):
+        q = spark.read.parquet(f"{out}/{path}").select("bucket", F.unix_micros("ts").alias("us"))
+        return {r.bucket: r.us for r in q.collect()}
+
+    lin, man = micros("lineage"), micros("manifest")
+    assert lin == man and len(lin) == 4
+    assert expected == lin
+    assert all(t0 - 1 <= us / 1e6 <= t1 + 1 for us in lin.values())
+
+
+def test_epoch_us_round_trips_a_repeated_dst_hour(monkeypatch):
+    import datetime as dt
+    import time
+
+    from pdf_ocr_api_spark.sources.io import _epoch_us
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        # both instants read 2024-11-03 01:30 local; fromtimestamp sets fold
+        for t in (1730611800, 1730615400):
+            assert _epoch_us(dt.datetime.fromtimestamp(t)) == t * 10**6
+    finally:
+        monkeypatch.undo()
+        time.tzset()
